@@ -39,6 +39,8 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 import pyarrow as pa
 
+from fs2_data_spark.functions.arrow_kernel import run_kernel
+
 __all__ = [
     "spark_round",
     "fold_norm",
@@ -201,59 +203,47 @@ def cosine_topk_candidates(
     # conservative raw-score band half-width: one rounding quantum + slack
     band = (1.5 * 10.0 ** (-round_dp)) if round_dp is not None else 0.0
 
-    out_schema = pa.schema([
-        pa.field("q_vec_id", pa.int64()),
-        pa.field("n_vec_id", pa.int64()),
-        pa.field("cos_raw", pa.float64()),
-    ])
-
-    def gen(batches):
-        for batch in batches:
-            nb = batch.num_rows
-            if nb == 0 or nq == 0:
+    def body(cols):
+        if nq == 0:
+            return None
+        ids = np.asarray(cols[0], dtype=np.int64)
+        nb = len(ids)
+        x = list_to_mat(cols[1], dim)
+        cn = fold_norm(x)
+        dot = fold_dot_mat(x, q_mat)                     # (nb, nq)
+        denom = cn[:, None] * qn[None, :]                # an*bn (commut.)
+        valid = (qn[None, :] > 0) & (cn[:, None] > 0)
+        scores = np.where(valid, np.divide(dot, denom,
+                                           out=np.zeros_like(dot),
+                                           where=denom != 0), 0.0)
+        # self-pair exclusion: sentinel below any real cosine
+        self_mask = ids[:, None] == q_ids[None, :]
+        scores[self_mask] = -np.inf
+        kk = min(k, nb)
+        cut = np.partition(scores, nb - kk, axis=0)[nb - kk]  # kth largest
+        keep = scores >= np.maximum(cut - band, -1.0)
+        keep &= ~self_mask
+        oq, on, oc = [], [], []
+        rows, qcols = np.nonzero(keep.T)  # rows=query idx, qcols=corpus idx
+        for qi in range(nq):
+            sel = qcols[rows == qi]
+            if len(sel) == 0:
                 continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            cn = fold_norm(x)
-            dot = fold_dot_mat(x, q_mat)                     # (nb, nq)
-            denom = cn[:, None] * qn[None, :]                # an*bn (commut.)
-            valid = (qn[None, :] > 0) & (cn[:, None] > 0)
-            scores = np.where(valid, np.divide(dot, denom,
-                                               out=np.zeros_like(dot),
-                                               where=denom != 0), 0.0)
-            # self-pair exclusion: sentinel below any real cosine
-            self_mask = ids[:, None] == q_ids[None, :]
-            scores[self_mask] = -np.inf
-            kk = min(k, nb)
-            cut = np.partition(scores, nb - kk, axis=0)[nb - kk]  # kth largest
-            keep = scores >= np.maximum(cut - band, -1.0)
-            keep &= ~self_mask
-            oq, on, oc = [], [], []
-            rows, cols = np.nonzero(keep.T)  # rows=query idx, cols=corpus idx
-            for qi in range(nq):
-                sel = cols[rows == qi]
-                if len(sel) == 0:
-                    continue
-                s = scores[sel, qi]
-                nid = ids[sel]
-                top = _trim_topk(s, nid, k, round_dp)
-                oq.append(np.full(len(top), q_ids[qi], dtype=np.int64))
-                on.append(nid[top])
-                oc.append(s[top])
-            if not oq:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(oq)), pa.array(np.concatenate(on)),
-                 pa.array(np.concatenate(oc))], schema=out_schema)
+            s = scores[sel, qi]
+            nid = ids[sel]
+            top = _trim_topk(s, nid, k, round_dp)
+            oq.append(np.full(len(top), q_ids[qi], dtype=np.int64))
+            on.append(nid[top])
+            oc.append(s[top])
+        if not oq:
+            return None
+        return None, [np.concatenate(oq), np.concatenate(on),
+                      np.concatenate(oc)]
 
-    sc = corpus.sparkSession.sparkContext
-    n_part = max(sc.defaultParallelism, 1)
-    src = corpus.select(F.col(id_col).cast("long").alias("__id"),
-                        F.col(vec_col).alias("__v"))
-    # the source is typically one small parquet split; spread it so the kernel
-    # runs on every core (round-robin exchange of ids+vectors only)
-    src = src.repartition(n_part)
-    return src.mapInArrow(gen, "q_vec_id long, n_vec_id long, cos_raw double")
+    # ids compute here (self-pair exclusion, id tie-break): int64 input
+    return run_kernel(corpus, body,
+                      "q_vec_id long, n_vec_id long, cos_raw double",
+                      [F.col(id_col).cast("long"), vec_col])
 
 
 # ---------------------------------------------------------------------------
@@ -282,56 +272,47 @@ def l2_int_topk_candidates(
     q_mat = np.ascontiguousarray(q_codes, dtype=np.int64)
     nq = len(q_ids)
 
-    out_schema = pa.schema([
-        pa.field("q_vec_id", pa.int64()),
-        pa.field("n_vec_id", pa.int64()),
-        pa.field("dist_sq", pa.int64()),
-    ])
-
-    def gen(batches):
-        for batch in batches:
-            nb = batch.num_rows
-            if nb == 0 or nq == 0:
+    def body(cols):
+        if nq == 0:
+            return None
+        ids = np.asarray(cols[0], dtype=np.int64)
+        nb = len(ids)
+        col = cols[1]
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        vals = np.asarray(col.flatten(), dtype=np.int64)
+        if vals.size != nb * dim:
+            raise ValueError("ragged code rows")
+        x = vals.reshape(nb, dim)
+        dist = np.zeros((nb, nq), dtype=np.int64)
+        for j in range(dim):
+            d = x[:, j, None] - q_mat[None, :, j]
+            dist += d * d
+        self_mask = ids[:, None] == q_ids[None, :]
+        big = np.iinfo(np.int64).max
+        dist[self_mask] = big
+        kk = min(k, nb)
+        cut = np.partition(dist, kk - 1, axis=0)[kk - 1]
+        oq, on, oc = [], [], []
+        for qi in range(nq):
+            sel = np.nonzero((dist[:, qi] <= cut[qi])
+                             & ~self_mask[:, qi])[0]
+            if len(sel) == 0:
                 continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            col = batch.column(1)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            vals = np.asarray(col.flatten(), dtype=np.int64)
-            if vals.size != nb * dim:
-                raise ValueError("ragged code rows")
-            x = vals.reshape(nb, dim)
-            dist = np.zeros((nb, nq), dtype=np.int64)
-            for j in range(dim):
-                d = x[:, j, None] - q_mat[None, :, j]
-                dist += d * d
-            self_mask = ids[:, None] == q_ids[None, :]
-            big = np.iinfo(np.int64).max
-            dist[self_mask] = big
-            kk = min(k, nb)
-            cut = np.partition(dist, kk - 1, axis=0)[kk - 1]
-            oq, on, oc = [], [], []
-            for qi in range(nq):
-                sel = np.nonzero((dist[:, qi] <= cut[qi])
-                                 & ~self_mask[:, qi])[0]
-                if len(sel) == 0:
-                    continue
-                dd, nid = dist[sel, qi], ids[sel]
-                top = np.lexsort((nid, dd))[:k]
-                oq.append(np.full(len(top), q_ids[qi], dtype=np.int64))
-                on.append(nid[top])
-                oc.append(dd[top])
-            if not oq:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(oq)), pa.array(np.concatenate(on)),
-                 pa.array(np.concatenate(oc))], schema=out_schema)
+            dd, nid = dist[sel, qi], ids[sel]
+            top = np.lexsort((nid, dd))[:k]
+            oq.append(np.full(len(top), q_ids[qi], dtype=np.int64))
+            on.append(nid[top])
+            oc.append(dd[top])
+        if not oq:
+            return None
+        return None, [np.concatenate(oq), np.concatenate(on),
+                      np.concatenate(oc)]
 
-    sc = coded.sparkSession.sparkContext
-    src = coded.select(F.col(id_col).cast("long").alias("__id"),
-                       F.col(code_col).alias("__q"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(gen, "q_vec_id long, n_vec_id long, dist_sq long")
+    # ids compute here (self-pair exclusion, id tie-break): int64 input
+    return run_kernel(coded, body,
+                      "q_vec_id long, n_vec_id long, dist_sq long",
+                      [F.col(id_col).cast("long"), code_col])
 
 
 # ---------------------------------------------------------------------------
@@ -358,41 +339,21 @@ def lsh_augment_kernel(
     dim: int,
     seed: int,
 ):
-    """mapInArrow producing ``(vec_id, v array<double>, nrm, sig)`` —
-    bit-identical to the staged Catalyst projection in ``lsh_bucket_topk``:
-    the signature's per-plane projection is the same left-to-right fold of
-    ``x * w(p, j)`` and the sign test is the same ``proj > 0``."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
-
+    """``(id_col, v array<double>, nrm, sig)`` — bit-identical to the
+    staged Catalyst projection in ``lsh_bucket_topk``: the signature's
+    per-plane projection is the same left-to-right fold of ``x * w(p, j)``
+    and the sign test is the same ``proj > 0``."""
     w = hyperplane_weights(n_planes, dim, seed)
     bits = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
 
-    out_schema = pa.schema([
-        pa.field("vec_id", pa.int64()),
-        pa.field("v", pa.list_(pa.float64())),
-        pa.field("nrm", pa.float64()),
-        pa.field("sig", pa.int64()),
-    ])
+    def body(cols):
+        x = list_to_mat(cols[0], dim)
+        proj = fold_dot_mat(x, w)               # (n, n_planes), exact fold
+        sig = ((proj > 0) * bits[None, :]).sum(axis=1)
+        return None, [mat_to_list_array(x), fold_norm(x), sig]
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            nrm = fold_norm(x)
-            proj = fold_dot_mat(x, w)               # (n, n_planes), exact fold
-            sig = ((proj > 0) * bits[None, :]).sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), mat_to_list_array(x), pa.array(nrm),
-                 pa.array(sig)], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    n_part = max(sc.defaultParallelism, 1)
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(vec_col).alias("__v")).repartition(n_part)
-    return src.mapInArrow(
-        gen, "vec_id long, v array<double>, nrm double, sig long")
+    return run_kernel(df, body, "v array<double>, nrm double, sig long",
+                      [vec_col], keep=[id_col])
 
 
 # ---------------------------------------------------------------------------
@@ -407,62 +368,45 @@ def ivf_assign_kernel(
     dim: int = 64,
     canonical: bool = False,
 ):
-    """mapInArrow replica of ``ivf_index``'s ``assign``: squared-distance fold
+    """Replica of ``ivf_index``'s ``assign``: squared-distance fold
     ``zip_with(v, cv, (a,b) -> (a-b)*(a-b))`` summed left-to-right per
     centroid, argmin by (``round(d, 6)`` when canonical else raw ``d``) ASC,
-    cell ASC.  Emits ``(id, v array<double>, cell)``.
+    cell ASC.  Emits ``(id_col, v array<double>, cell)``.
 
     ``cent_rows``: collected ``(cell, cv)`` rows — ``n_cells`` of them, the
     same bounded driver read the legacy broadcast already did.
     """
-    import pyspark.sql.functions as F  # noqa: PLC0415
-
     cells = np.asarray([c for c, _ in cent_rows], dtype=np.int64)
     cmat = np.asarray([list(v) for _, v in cent_rows], dtype=np.float64)
     order = np.argsort(cells, kind="stable")
     cells, cmat = cells[order], cmat[order]
     ncell = len(cells)
 
-    out_schema = pa.schema([
-        pa.field("id", pa.int64()),
-        pa.field("v", pa.list_(pa.float64())),
-        pa.field("cell", pa.int32()),
-    ])
+    def body(cols):
+        x = list_to_mat(cols[0], dim)
+        nb = len(x)
+        dist = np.zeros((nb, ncell), dtype=np.float64)
+        for j in range(dim):
+            dj = x[:, j, None] - cmat[None, :, j]
+            dist += dj * dj
+        if not canonical:
+            best = np.argmin(dist, axis=1)  # ties -> lowest index == lowest cell
+        else:
+            # argmin on ROUNDED distance: band-prune on raw, exact-trim
+            cut = dist.min(axis=1)
+            best = np.empty(nb, dtype=np.int64)
+            for i in range(nb):
+                cand = np.nonzero(dist[i] <= cut[i] + 1.002e-6)[0]
+                if len(cand) == 1:
+                    best[i] = cand[0]
+                else:
+                    rr = [(spark_round(dist[i, c], 6), cells[c], c)
+                          for c in cand]
+                    best[i] = min(rr)[2]
+        return None, [mat_to_list_array(x), cells[best]]
 
-    def gen(batches):
-        for batch in batches:
-            nb = batch.num_rows
-            if nb == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            dist = np.zeros((nb, ncell), dtype=np.float64)
-            for j in range(dim):
-                dj = x[:, j, None] - cmat[None, :, j]
-                dist += dj * dj
-            if not canonical:
-                best = np.argmin(dist, axis=1)  # ties -> lowest index == lowest cell
-            else:
-                # argmin on ROUNDED distance: band-prune on raw, exact-trim
-                cut = dist.min(axis=1)
-                best = np.empty(nb, dtype=np.int64)
-                for i in range(nb):
-                    cand = np.nonzero(dist[i] <= cut[i] + 1.002e-6)[0]
-                    if len(cand) == 1:
-                        best[i] = cand[0]
-                    else:
-                        rr = [(spark_round(dist[i, c], 6), cells[c], c)
-                              for c in cand]
-                        best[i] = min(rr)[2]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), mat_to_list_array(x),
-                 pa.array(cells[best].astype(np.int32))], schema=out_schema)
-
-    sc = df.sparkSession.sparkContext
-    n_part = max(sc.defaultParallelism, 1)
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(vec_col).alias("__v")).repartition(n_part)
-    return src.mapInArrow(gen, "id long, v array<double>, cell int")
+    return run_kernel(df, body, "v array<double>, cell int", [vec_col],
+                      keep=[id_col])
 
 
 # ---------------------------------------------------------------------------
@@ -484,36 +428,19 @@ def _cos_vs(x: np.ndarray, nrm: np.ndarray, qv: np.ndarray, qn: float
 
 
 def mmr_rel_kernel(df, id_col: str, vec_col: str, qv: list, dim: int):
-    """mapInArrow emitting ``(vec_id, v array<double>, nrm, rel_raw)`` —
-    the relevance pass of ``mmr_select`` (cosine of every pool row against
-    the query anchor), bit-identical folds."""
-    import pyspark.sql.functions as F  # noqa: PLC0415
-
+    """``(id_col, v array<double>, nrm, rel_raw)`` — the relevance pass of
+    ``mmr_select`` (cosine of every pool row against the query anchor),
+    bit-identical folds."""
     q = np.asarray(qv, dtype=np.float64)
     qn = float(fold_norm(q[None, :])[0])
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = np.asarray(batch.column(0), dtype=np.int64)
-            x = list_to_mat(batch.column(1), dim)
-            nrm = fold_norm(x)
-            rel = _cos_vs(x, nrm, q, qn)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), mat_to_list_array(x), pa.array(nrm),
-                 pa.array(rel)],
-                schema=pa.schema([pa.field("vec_id", pa.int64()),
-                                  pa.field("v", pa.list_(pa.float64())),
-                                  pa.field("nrm", pa.float64()),
-                                  pa.field("rel_raw", pa.float64())]))
+    def body(cols):
+        x = list_to_mat(cols[0], dim)
+        nrm = fold_norm(x)
+        return None, [mat_to_list_array(x), nrm, _cos_vs(x, nrm, q, qn)]
 
-    sc = df.sparkSession.sparkContext
-    src = df.select(F.col(id_col).cast("long").alias("__id"),
-                    F.col(vec_col).alias("__v"))
-    src = src.repartition(max(sc.defaultParallelism, 1))
-    return src.mapInArrow(
-        gen, "vec_id long, v array<double>, nrm double, rel_raw double")
+    return run_kernel(df, body, "v array<double>, nrm double, rel_raw double",
+                      [vec_col], keep=[id_col])
 
 
 def mmr_ms_update_kernel(cand, sv: list, sn: float, round_dp: int,
@@ -598,37 +525,34 @@ def cell_pair_candidates(
     band = threshold - (1.5 * 10.0 ** (-round_dp) if round_dp is not None
                         else 0.0)
 
-    out_schema = pa.schema([pa.field("i", pa.int64()),
-                            pa.field("j", pa.int64()),
-                            pa.field("cos_raw", pa.float64())])
+    def body(cols):
+        ra, rb = cols
+        oi, oj, oc = [], [], []
+        for r in range(len(ra)):
+            ids_a, xa = _unpack_tile(ra, r)
+            ids_b, xb = _unpack_tile(rb, r)
+            same = (len(ids_a) == len(ids_b)
+                    and ids_a[0] == ids_b[0]) if len(ids_a) else True
+            na, nb = fold_norm(xa), fold_norm(xb)
+            # i rides the b side (larger ids), j the a side
+            dot = fold_dot_mat(xb, xa)                  # (nb_rows, na)
+            denom = nb[:, None] * na[None, :]
+            valid = (nb[:, None] > 0) & (na[None, :] > 0)
+            cos = np.where(valid,
+                           np.divide(dot, denom,
+                                     out=np.zeros_like(dot),
+                                     where=denom != 0), 0.0)
+            keep = cos >= band
+            if same:
+                keep &= ids_b[:, None] > ids_a[None, :]
+            iu, ju = np.nonzero(keep)
+            oi.append(ids_b[iu])
+            oj.append(ids_a[ju])
+            oc.append(cos[iu, ju])
+        return None, [np.concatenate(oi), np.concatenate(oj),
+                      np.concatenate(oc)]
 
-    def gen(batches):
-        for batch in batches:
-            ra, rb = batch.column(0), batch.column(1)
-            for r in range(batch.num_rows):
-                ids_a, xa = _unpack_tile(ra, r)
-                ids_b, xb = _unpack_tile(rb, r)
-                same = (len(ids_a) == len(ids_b)
-                        and ids_a[0] == ids_b[0]) if len(ids_a) else True
-                na, nb = fold_norm(xa), fold_norm(xb)
-                # i rides the b side (larger ids), j the a side
-                dot = fold_dot_mat(xb, xa)                  # (nb_rows, na)
-                denom = nb[:, None] * na[None, :]
-                valid = (nb[:, None] > 0) & (na[None, :] > 0)
-                cos = np.where(valid,
-                               np.divide(dot, denom,
-                                         out=np.zeros_like(dot),
-                                         where=denom != 0), 0.0)
-                keep = cos >= band
-                if same:
-                    keep &= ids_b[:, None] > ids_a[None, :]
-                iu, ju = np.nonzero(keep)
-                if len(iu) == 0:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids_b[iu]), pa.array(ids_a[ju]),
-                     pa.array(cos[iu, ju])], schema=out_schema)
-
+    # ids compute here (same-tile ordering, i > j): int64 input
     d = assigned.select(F.col(cell_col).alias("_c"),
                         F.col(id_col).cast("long").alias("id"),
                         F.col(vec_col).alias("v"))
@@ -642,9 +566,7 @@ def cell_pair_candidates(
                       F.col("rows").alias("_ra"))
     b = packed.select(F.col("_c").alias("_c2"), F.col("_blk").alias("_bb"),
                       F.col("rows").alias("_rb"))
-    tiles = (a.join(b, (F.col("_c") == F.col("_c2"))
-                    & (F.col("_ba") <= F.col("_bb")))
-             .select("_ra", "_rb"))
-    sc = assigned.sparkSession.sparkContext
-    tiles = tiles.repartition(max(sc.defaultParallelism, 1))
-    return tiles.mapInArrow(gen, "i long, j long, cos_raw double")
+    tiles = a.join(b, (F.col("_c") == F.col("_c2"))
+                   & (F.col("_ba") <= F.col("_bb")))
+    return run_kernel(tiles, body, "i long, j long, cos_raw double",
+                      ["_ra", "_rb"])

@@ -516,10 +516,8 @@ def top_ngram_fraction(
     # the exact JVM expressions over the kernel-emitted integers
     from fs2_data_spark.functions.textkernels import top_ngram_kernel
 
-    idt = docs.schema[id_col].dataType
     counted = top_ngram_kernel(docs, id_col, text_col, tuple(ns))
-    out_cols = [F.col("doc_id").cast(idt).alias(id_col),
-                F.col("n_words")]
+    out_cols = [F.col(id_col), F.col("n_words")]
     for n in ns:
         top = F.col(f"top{n}_count")
         frac = (F.when(F.col("n_words") > 0,

@@ -61,16 +61,15 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 3,
     round_dp: int | None = 4,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (q_vec_id, n_vec_id, cos_sim).
 
     The ranking key is the *rounded* cosine (+ id tie-break) so results are
     deterministic under floating-point summation-order differences.
 
-    ``strategy='auto'`` (default) runs the (|corpus| x |queries|) pair
-    arithmetic as a numpy ``mapInArrow`` kernel (guide §4.2) whenever the
-    query side is collectible (it is the BNLJ *broadcast build side* in the
+    The (|corpus| x |queries|) pair arithmetic runs as a numpy
+    ``mapInArrow`` kernel (guide §4.2) whenever the query side is
+    collectible (it is the BNLJ *broadcast build side* in the
     legacy plan, so the driver read is the same bytes the broadcast already
     shipped) and ids are integral: measured 49 s -> ~1 s at sf1 (400 x 20k
     pairs of 64-dim interpreted-HOF folds).  The kernel emits per-batch exact
@@ -78,10 +77,11 @@ def cosine_topk(
     bit-identical raw cosines (fold-order replica, see
     ``functions/veckernels.py``); JVM ``F.round`` + one window over the tiny
     candidate set produce the final rows — value-identical to the Catalyst
-    path (pinned by tests + the frozen DuckDB oracle).
-    ``strategy='catalyst'`` keeps the legacy broadcast-NLJ plan.
+    path (pinned by tests + the frozen DuckDB oracle).  More than
+    200k queries, mixed vector dimensions or non-integral ids take the
+    Catalyst broadcast-NLJ plan.
     """
-    if strategy == "auto" and _integral_id(queries, id_col):
+    if _integral_id(queries, id_col):
         import numpy as np
 
         from fs2_data_spark.functions import veckernels as VK
@@ -212,11 +212,8 @@ def ivf_index(
             cent_rows = [(r["cell"], list(r["cv"]))
                          for r in cents_df.collect()]
             if all(len(v) == kernel_dim for _, v in cent_rows):
-                out = VK.ivf_assign_kernel(df, cent_rows, "id", "v",
-                                           kernel_dim, canonical)
-                return out.select(
-                    F.col("id").cast(df.schema["id"].dataType).alias("id"),
-                    "v", "cell")
+                return VK.ivf_assign_kernel(df, cent_rows, "id", "v",
+                                            kernel_dim, canonical)
         dist = F.aggregate(
             F.zip_with(F.col("v"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
             F.lit(0.0), lambda acc, x: acc + x)
@@ -318,13 +315,11 @@ def lsh_bucket_topk(
         from fs2_data_spark.functions import veckernels as VK
         q = VK.lsh_augment_kernel(queries, id_col, vec_col, n_planes, dim,
                                   seed=42).select(
-            F.col("vec_id").cast(queries.schema[id_col].dataType)
-            .alias("q_vec_id"), F.col("v").alias("qv"),
+            F.col(id_col).alias("q_vec_id"), F.col("v").alias("qv"),
             F.col("nrm").alias("qn"), "sig")
         c = VK.lsh_augment_kernel(corpus, id_col, vec_col, n_planes, dim,
                                   seed=42).select(
-            F.col("vec_id").cast(corpus.schema[id_col].dataType)
-            .alias("n_vec_id"), F.col("v").alias("cv"),
+            F.col(id_col).alias("n_vec_id"), F.col("v").alias("cv"),
             F.col("nrm").alias("cn"), "sig")
     else:
         # staged double-cast vector: the signature evaluates n_planes
@@ -593,7 +588,7 @@ def mmr_select(
             # 1-row top and feeds the next kernel — without truncation the
             # k-step lineage re-runs every earlier kernel per step (O(k^2)
             # pool passes, measured slower than the interpreted plan)
-            cand = aug.select("vec_id", "v", "nrm",
+            cand = aug.select(F.col(id_col).alias("vec_id"), "v", "nrm",
                               F.round("rel_raw", round_dp).alias("rel"),
                               F.lit(0.0).alias("_ms")).localCheckpoint()
             picks_rows = []

@@ -723,8 +723,7 @@ def tok_entropy_docs(spark, sf_dir):
     out = token_entropy_kernel(d, "doc_id", "text")
     n = F.col("n_tok").cast("double")
     return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "n_tok", "n_distinct", "max_freq",
+        "doc_id", "n_tok", "n_distinct", "max_freq",
         F.round("entropy_raw", 4).alias("entropy4"),
         F.when(n > 0, F.round(F.col("n_distinct").cast("double") / n, 4))
          .otherwise(F.lit(0.0)).alias("distinct_ratio4"))
@@ -2602,8 +2601,7 @@ def minhash_sigs(spark, sf_dir):
     # integer values, no interpreted per-word HOF arithmetic)
     from fs2_data_spark.functions.textkernels import word_code_minhash_kernel
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return (word_code_minhash_kernel(d, "doc_id", "text", k=8)
-            .withColumnRenamed("id", "doc_id"))
+    return word_code_minhash_kernel(d, "doc_id", "text", k=8)
 
 
 @_q("minhash_band_buckets", f"""
@@ -2618,9 +2616,9 @@ FROM b GROUP BY band_id, band_val HAVING count(*) > 1
 """)
 def minhash_buckets(spark, sf_dir):
     from fs2_data_spark.functions.textkernels import word_code_minhash_kernel
-    d = (word_code_minhash_kernel(
+    d = word_code_minhash_kernel(
         _t(spark, sf_dir, "documents").select("doc_id", "text"),
-        "doc_id", "text", k=8).withColumnRenamed("id", "doc_id"))
+        "doc_id", "text", k=8)
     P = F.lit(2_147_483_647).cast("bigint")
     bands = [
         d.select(F.lit(i).alias("band_id"),
@@ -3512,8 +3510,7 @@ def winnow_fp_docs(spark, sf_dir):
     from fs2_data_spark.functions.textkernels import winnow_fp_kernel
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     out = winnow_fp_kernel(d, "doc_id", "text", k=3, w=4)
-    return out.select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                      _arr_str(F.col("fp")).alias("fp_str"),
+    return out.select("doc_id", _arr_str(F.col("fp")).alias("fp_str"),
                       F.size("fp").alias("n_fp"))
 
 
@@ -4579,7 +4576,7 @@ def hashed_bow_docs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     out = hashed_bow_kernel(d, "doc_id", "text", dim=32)
     return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), "n_words",
+        "doc_id", "n_words",
         F.size(F.filter(F.col("vec"), lambda c: c > 0)).alias("nnz"),
         _arr_str(F.col("vec")).alias("vec_str"))
 
@@ -5550,9 +5547,7 @@ def dup_token_spans(spark, sf_dir):
     # (identical int64 hashes); counts + join back stay JVM
     from fs2_data_spark.functions.textkernels import token_spans_kernel
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    spans = (token_spans_kernel(d, "doc_id", "text", k=8)
-             .select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                     "pos", "span_h"))
+    spans = token_spans_kernel(d, "doc_id", "text", k=8)
     counts = (spans.groupBy("span_h")
               .agg(F.countDistinct("doc_id").alias("n_docs"))
               .filter(F.col("n_docs") >= 2))
@@ -5618,8 +5613,7 @@ def decontaminate_docs(spark, sf_dir):
     from fs2_data_spark.functions.textkernels import token_spans_kernel
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     spans = (token_spans_kernel(d, "doc_id", "text", k=8)
-             .select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                     "span_h"))
+             .select("doc_id", "span_h"))
     b = (spans.filter(F.col("doc_id") % 17 == 0)
          .select("span_h").distinct())
     hits = (spans.join(F.broadcast(b), "span_h")
