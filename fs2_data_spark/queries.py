@@ -5199,20 +5199,12 @@ def cbor_roundtrip(spark, sf_dir):
     (reference parity semantics ``cbor-json/shared/src/main/scala/fs2/data/
     cbor/package.scala:32-44``), so the DuckDB oracle is simply the source
     table — a hard value oracle on encode -> transcode -> parse."""
-    import pandas as pd  # noqa: PLC0415
-
+    from fs2_data_spark.functions.arrow_kernel import run_rows
     from fs2_data_spark.sources.binary_codecs import cbor_encode, transcode_cbor_to_json
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-
-    def enc(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [cbor_encode({"t": t, "l": lg})
-                            for t, lg in zip(pdf["text"], pdf["lang"])],
-            })
-
-    enc_df = d.mapInPandas(enc, "doc_id bigint, payload binary")
+    d = _t(spark, sf_dir, "documents")
+    # one struct input: a NULL field encodes as CBOR null, not a NULL row
+    enc_df = run_rows(d, lambda r: (cbor_encode({"t": r["text"], "l": r["lang"]}),),
+                      "payload binary", [F.struct("text", "lang")], ["doc_id"])
     out = transcode_cbor_to_json(enc_df, "payload", mode="attempt")
     parsed = out.withColumn("j", F.from_json("json", "t string, l string"))
     return parsed.select("doc_id", F.col("j.t").alias("t"),
@@ -6939,9 +6931,10 @@ def _computed_force_front() -> list[str]:
 FORCE_FRONT: list[str] = sorted(
     set(_computed_force_front())
     | {"ann_ivf_topk", "multimodal_decode_smoke",
-       # driver-red in r5 (hash): re-prove after this round's fixes even
-       # where the fingerprint window cannot see the r5-era change
-       "streaming_running_features_smoke", "interarrival_events",
+       # driver-red in r5 and r6 (hash): re-prove after each fix even
+       # where the fingerprint window cannot see the change
+       # (interarrival_events, red in r5, was re-proved green in r6)
+       "streaming_running_features_smoke",
        # r6: quantile_bucket_map was rewritten (global_cumsum) but is
        # reached via an intra-module call the function-level fingerprint
        # cannot see (quantile_buckets -> quantile_bucket_map)

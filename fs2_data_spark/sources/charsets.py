@@ -16,16 +16,16 @@ Decode strategies:
   invalid sequences, exactly fail-the-stream. latin9 (no JVM charset)
   takes the Arrow kernel.
 - ``mode="attempt"``: failing rows yield null text + ``ok=false`` (the
-  reference's ``attempt*`` variants); Arrow-batched ``mapInPandas``.
+  reference's ``attempt*`` variants); per-row ``arrow_kernel.run_rows``.
 - ``mode="replace"``: invalid sequences become U+FFFD; Arrow-batched
   (``bytes.decode(errors="replace")``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, functions as F
+
+from fs2_data_spark.functions.arrow_kernel import run_rows
 
 # charset aliases: reference name -> (python codec, JVM charset or None)
 CHARSETS: dict[str, tuple[str, str | None]] = {
@@ -46,36 +46,11 @@ def _convert_kernel(df: DataFrame, col: str, out_col: str, out_type: str,
     if mode not in ("strict", "attempt", "replace"):
         raise ValueError(f"unknown mode {mode!r}")
 
-    import pandas as pd  # noqa: PLC0415
-
-    strict = mode == "strict"
     errors = "replace" if mode == "replace" else "strict"
-    passthrough = [f for f in df.schema.fields if f.name not in (out_col, "ok")]
-    cols = [f.name for f in passthrough] + [out_col, "ok"]
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in passthrough]
-        + [f"{out_col} {out_type}", "ok boolean"])
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs, oks = [], []
-            for raw in pdf[col]:
-                if raw is None:
-                    outs.append(None)
-                    oks.append(True)
-                    continue
-                try:
-                    outs.append(convert(raw, errors))
-                    oks.append(True)
-                except fail_excs:
-                    if strict:
-                        raise
-                    outs.append(None)
-                    oks.append(False)
-            yield pdf.assign(**{out_col: outs, "ok": oks})[cols]
-
-    return df.mapInPandas(kernel, schema)
-
+    keep = [c for c in df.columns if c not in (out_col, "ok")]
+    return run_rows(df, lambda raw: (convert(raw, errors), True),
+                    f"`{out_col}` {out_type}, ok boolean", [col], keep,
+                    mode=mode, errors=fail_excs, fallback=(None, False))
 
 
 def decode_text(df: DataFrame, col: str = "payload", charset: str = "utf8",

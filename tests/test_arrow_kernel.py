@@ -1,15 +1,22 @@
-"""``functions/arrow_kernel.run_kernel`` and the kernels that run on it:
+"""``functions/arrow_kernel`` and the kernels and engines that run on it:
 ids pass through with their own Spark type and value (the byte / short /
 int / long / decimal / string matrix of PySpark's own pandas-UDF suite,
 plus a NULL id and empty/NULL text), astral-plane text matches the
 ``functions/text`` Catalyst references, overflow raises where Catalyst
-raises, and a NULL embedding projects to NULL."""
+raises, and a NULL embedding projects to NULL.  The per-document format
+engines (``run_rows``) keep passthrough columns exact, key XML rows by
+Spark's string cast, and follow one NULL-document rule; only this module
+and a few named sites build their own ``mapInPandas``/``mapInArrow``."""
 
+import math
+import re
 from decimal import Decimal
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from fs2_data_spark.functions import jsonq, render, selector, xpath
 from fs2_data_spark.functions import text as TXT
 from fs2_data_spark.functions.textkernels import (
     shingle_minhash_kernel,
@@ -19,9 +26,12 @@ from fs2_data_spark.functions.textkernels import (
     winnow_fp_kernel,
     word_code_minhash_kernel,
 )
+from fs2_data_spark.operators import multimodal
 from fs2_data_spark.operators.dedup import jaccard_lsh_pairs, segment_dedup
 from fs2_data_spark.operators.linkage import blocked_edit_pairs
 from fs2_data_spark.operators.projection import jl_project
+from fs2_data_spark.sources import binary_codecs as bc
+from fs2_data_spark.sources import charsets, xmlsrc
 
 _ID_TYPES = {
     "tinyint": [1, 2, 3, 4, 5],
@@ -200,3 +210,148 @@ def test_jl_project_null_embedding_is_null(spark):
            jl_project(e, dim=4, out_dim=2).collect()}
     assert got[2] == (None, None) and got[3] == (None, None)
     assert got[1][0] is not None
+
+
+# ---------------------------------------------------------------------------
+# per-document format engines (run_rows)
+# ---------------------------------------------------------------------------
+
+def _engine(name):
+    """name -> (fn(df, mode), one-to-one output columns or None for an
+    exploding engine, whether the engine has strict/attempt modes)."""
+    return {
+        "select_path_all": (lambda d, m: jsonq.select_path_all(
+            d, "js", "$..b", mode=m), None, True),
+        "jq_run": (lambda d, m: jsonq.jq_run(d, "js", ".b", mode=m),
+                   None, True),
+        "apply_selector": (lambda d, m: selector.apply_selector(
+            d, "js", ".b", mode=m), None, True),
+        "apply_selector_wrapped": (lambda d, m: selector.apply_selector_wrapped(
+            d, "js", ".b", mode=m), ["filtered"], True),
+        "json_tokenize": (lambda d, m: jsonq.json_tokenize(d, "js", mode=m),
+                          None, True),
+        "json_merge_patch": (lambda d, m: jsonq.json_merge_patch(
+            d, "js", "js", mode=m), ["merged"], True),
+        "json_transform": (lambda d, m: jsonq.json_transform(
+            d, "js", "$..b", lambda v: v, mode=m), ["transformed"], True),
+        "render_json_pretty": (lambda d, m: jsonq.render_json_pretty(d, "js"),
+                               ["pretty"], False),
+        "pretty_json": (lambda d, m: render.pretty_json(d, "js", mode=m),
+                        ["pretty", "ok"], True),
+        "pretty_xml": (lambda d, m: render.pretty_xml(d, "xml", mode=m),
+                       ["pretty", "ok"], True),
+        "decode_text": (lambda d, m: charsets.decode_text(
+            d, "cbor", charset="latin9", mode=m), ["text", "ok"], True),
+        "transcode_cbor_to_json": (lambda d, m: bc.transcode_cbor_to_json(
+            d, "cbor", mode=m), ["json", "ok"], True),
+        "transcode_json_to_cbor": (lambda d, m: bc.transcode_json_to_cbor(
+            d, "js", out_col="enc", mode=m), ["enc", "ok"], True),
+        "decode_image": (lambda d, m: multimodal.decode_image(
+            d, "cbor", fake=True), ["features"], False),
+        "xml_events": (lambda d, m: xmlsrc.xml_events(d, "xml", "id", mode=m),
+                       None, True),
+        "xml_events_raw": (lambda d, m: xmlsrc.xml_events_raw(
+            d, "xml", "id", mode=m), None, True),
+        "xpath_filter": (lambda d, m: xpath.xpath_filter(
+            d, "xml", "//a", key_col="id", mode=m), None, True),
+        "xml_dom": (lambda d, m: xmlsrc.xml_dom(d, "xml", "id", mode=m),
+                    ["dom"], True),
+    }[name]
+
+
+_DOC_SCHEMA = "js string, xml string, cbor binary"
+
+
+def _doc():
+    return ('{"b": 1}', "<r><a>x</a></r>", bc.cbor_encode({"b": 1}))
+
+
+_PASS = ("id", "x", "d", "s")
+
+
+def _canon(v):
+    return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+
+@pytest.mark.parametrize("name", [
+    "select_path_all", "jq_run", "apply_selector", "apply_selector_wrapped",
+    "json_tokenize", "json_merge_patch", "json_transform",
+    "render_json_pretty", "pretty_json", "decode_text",
+    "transcode_cbor_to_json", "decode_image"])
+def test_engine_passthrough_columns_exact(spark, name):
+    # one batch: a pandas round trip turns the bigint column to float64
+    # when a NULL shares the batch (2^53+1 -> 2^53) and NaN to NULL
+    rows = [(2**53 + 1, float("nan"), Decimal(10**19 + 1), "a", *_doc()),
+            (None, 1.5, None, None, *_doc()),
+            (7, None, Decimal(5), "", *_doc())]
+    d = spark.createDataFrame(
+        rows, "id bigint, x double, d decimal(20,0), s string, "
+        + _DOC_SCHEMA).coalesce(1)
+    fn, _outs, _modal = _engine(name)
+    out = fn(d, "attempt")
+    for c in _PASS:
+        assert out.schema[c].dataType == d.schema[c].dataType, c
+    got = {tuple(_canon(r[c]) for c in _PASS) for r in out.collect()}
+    assert got == {tuple(_canon(v) for v in r[:4]) for r in rows}
+
+
+@pytest.mark.parametrize("name", ["xml_events", "xml_events_raw",
+                                  "xpath_filter", "xml_dom"])
+@pytest.mark.parametrize("key_type", ["bigint", "string"])
+def test_xml_key_is_spark_string_cast(spark, name, key_type):
+    keys = [1, None, 2**53 + 1] if key_type == "bigint" else ["k1", None]
+    d = spark.createDataFrame(
+        [(k, "<r><a>x</a></r>") for k in keys],
+        f"id {key_type}, xml string").coalesce(1)
+    fn, _outs, _modal = _engine(name)
+    out = fn(d, "strict")
+    key = "id" if name == "xml_dom" else "doc_key"
+    assert out.schema[key].dataType.simpleString() == "string"
+    assert {r[key] for r in out.collect()} == \
+        {None if k is None else str(k) for k in keys}
+
+
+_ENGINES = ["select_path_all", "jq_run", "apply_selector",
+            "apply_selector_wrapped", "json_tokenize", "json_merge_patch",
+            "json_transform", "render_json_pretty", "pretty_json",
+            "pretty_xml", "decode_text", "transcode_cbor_to_json",
+            "transcode_json_to_cbor", "decode_image", "xml_events",
+            "xml_events_raw", "xpath_filter", "xml_dom"]
+
+
+@pytest.mark.parametrize("mode", ["strict", "attempt"])
+@pytest.mark.parametrize("name", _ENGINES)
+def test_null_document_rule(spark, name, mode):
+    """A NULL document gives NULL outputs (ok = true) for a one-to-one
+    engine and no rows for an exploding one, in both modes."""
+    fn, outs, modal = _engine(name)
+    if mode == "attempt" and not modal:
+        pytest.skip("engine has no attempt mode")
+    d = spark.createDataFrame([(1, *_doc()), (2, None, None, None)],
+                              "id bigint, " + _DOC_SCHEMA)
+    got = fn(d, mode).collect()
+    key = "doc_key" if name in ("xml_events", "xml_events_raw",
+                                "xpath_filter") else "id"
+    null_rows = [r for r in got if str(r[key]) == "2"]
+    if outs is None:
+        assert null_rows == []
+        assert got, "the valid document must still emit rows"
+    else:
+        assert len(null_rows) == 1
+        assert [null_rows[0][c] for c in outs] == \
+            [True if c == "ok" else None for c in outs]
+
+
+def test_python_map_calls_only_in_the_runtime():
+    """``.mapInPandas(`` / ``.mapInArrow(`` appear only in the runtime and
+    the sites it does not cover: BPE's in-place column rewrite, the MMR
+    update gate, the table generator and the CSV header writer."""
+    root = Path(__file__).resolve().parent.parent / "fs2_data_spark"
+    allowed = {"functions/arrow_kernel.py", "operators/bpe.py",
+               "functions/veckernels.py", "tables.py", "sources/csvsrc.py"}
+    call = re.compile(r"\.mapIn(Pandas|Arrow)\(")
+    found = [f"{p.relative_to(root)}:{i}"
+             for p in sorted(root.rglob("*.py"))
+             for i, line in enumerate(p.read_text().splitlines(), 1)
+             if call.search(line)]
+    assert [f for f in found if f.rsplit(":", 1)[0] not in allowed] == []

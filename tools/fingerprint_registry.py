@@ -17,7 +17,10 @@ the function imports shows up as fingerprint drift.  Usage::
 The committed snapshot records the fingerprints as of the LAST round's end
 (the driver's round-start tree); ``queries.py`` compares current vs snapshot
 to tier changed queries to the window front.  Regenerate the snapshot (with
-``--write``) as the final step of every round.
+``--write``) as the final step of every round.  The current snapshot is
+round 5's, except that the 50 queries the round-6 driver run checked
+(``CORRECTNESS_r06.json``) hold the fingerprint of round 6's final tree,
+the tree that run validated.
 """
 
 from __future__ import annotations
